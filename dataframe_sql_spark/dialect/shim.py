@@ -23,6 +23,8 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
+from pyspark.errors import AnalysisException
+
 from .tokenizer import Token, detokenize, tokenize
 
 __all__ = ["translate", "CAST_TYPE_MAP"]
@@ -267,7 +269,12 @@ def _expand_star(
 ) -> list[Token] | None:
     try:
         schemas = [(prefix, schema_lookup(name)) for name, prefix in table_refs]
-    except Exception:
+    except AnalysisException as exc:
+        # An unknown name (or a CTE the catalog cannot see): leave the
+        # star to spark.sql, which resolves the CTE or raises its own
+        # TABLE_OR_VIEW_NOT_FOUND. Any other error is a real failure.
+        if exc.getCondition() != "TABLE_OR_VIEW_NOT_FOUND":
+            raise
         return None
     counts: dict[str, int] = {}
     for _, cols in schemas:

@@ -17,6 +17,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 
 from .dialect.shim import translate
+from .operators.lineage import truncate_lineage
 from .session import get_spark
 
 __all__ = [
@@ -42,10 +43,35 @@ class SparkSqlEngine:
     # -- catalog ----------------------------------------------------------
     def register_temp_table(self, frame: Any, table_name: str) -> None:
         """Register a Spark DataFrame (or pandas DataFrame, converted
-        via Arrow) under ``table_name``. Mirrors sql_select_query.py:15-39."""
+        via Arrow) under ``table_name``. Mirrors sql_select_query.py:15-39.
+
+        A pandas frame is copied into executor storage once, here
+        (reliable checkpoint when a checkpoint dir is set, else local).
+        Left as ``createDataFrame``'s driver-side ``LocalRelation``,
+        every query would re-evaluate it in Catalyst's optimizer
+        (``ConvertToLocalRelation``) and re-ship its rows to the
+        executors. The copy gets one partition per
+        ``spark.sql.files.maxPartitionBytes`` of its size, as a file of
+        the same bytes would be split. The blocks live until no
+        DataFrame references them, so a :meth:`query` result outlives
+        :meth:`remove_temp_table`. A Spark DataFrame stays a lazy view."""
         if not isinstance(frame, DataFrame):
-            frame = self.spark.createDataFrame(frame)
+            frame = truncate_lineage(self._split_by_size(self.spark.createDataFrame(frame)))
         frame.createOrReplaceTempView(table_name)
+
+    def _split_by_size(self, df: DataFrame) -> DataFrame:
+        """``df`` coalesced to one partition per maxPartitionBytes of its
+        size estimate. ``createDataFrame`` slices a frame into
+        defaultParallelism partitions whatever its size; a frame of a
+        few MiB stored that way makes every later query run a task per
+        core for a few milliseconds of work each, and pay per-task
+        overhead that grows when the cores are busy elsewhere."""
+        from .sources.io import _conf_bytes
+
+        stats = df._jdf.queryExecution().optimizedPlan().stats()
+        size = int(str(stats.sizeInBytes()))
+        split = _conf_bytes(self.spark, "spark.sql.files.maxPartitionBytes", 128 * 1024**2)
+        return df.coalesce(max(1, -(-size // split)))
 
     def remove_temp_table(self, table_name: str) -> None:
         """Drop a registered table. Mirrors sql_select_query.py:42-61

@@ -19,7 +19,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "tune_session", "tune_for_scale"]
+__all__ = ["get_spark", "tune_session"]
 
 # Runtime-settable confs the engine depends on for CORRECTNESS (not just
 # speed) on *any* session, including one built elsewhere and passed in
@@ -90,10 +90,13 @@ def tune_session(spark: SparkSession) -> None:
         except Exception:  # pragma: no cover - conf missing in a future Spark
             pass
     # Local-mode sessions default to 200 shuffle partitions — a 6×
-    # slowdown on a 32-core box. Match the core count; real clusters
-    # are handled by tune_for_scale/AQE coalescing instead.
+    # slowdown on a 32-core box. Match the core count, but only when the
+    # session's owner set no value of their own; on a real cluster AQE
+    # coalescing makes the initial number forgiving.
     try:
-        if spark.conf.get("spark.master", "").startswith("local"):
+        if spark.conf.get("spark.master", "").startswith("local") and (
+            spark.conf.get("spark.sql.shuffle.partitions", None) is None
+        ):
             cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 4))
             spark.conf.set("spark.sql.shuffle.partitions", cpus)
     except Exception:  # pragma: no cover
@@ -172,13 +175,3 @@ def get_spark(app_name: str = "dataframe_sql_spark") -> SparkSession:
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
-
-def tune_for_scale(spark: SparkSession, target_bytes: int) -> None:
-    """Adjust shuffle parallelism for a known input size.
-
-    Rule of thumb: ~128 MB per shuffle partition post-filter. With AQE
-    coalescing enabled the exact value is forgiving; this sets the upper
-    bound so huge inputs don't funnel through too few partitions.
-    """
-    partitions = max(32, target_bytes // (128 * 1024 * 1024))
-    spark.conf.set("spark.sql.shuffle.partitions", str(partitions))

@@ -7,6 +7,8 @@ cited per test).
 
 from __future__ import annotations
 
+import pytest
+
 from dataframe_sql_spark.dialect.shim import translate
 
 
@@ -87,6 +89,16 @@ def test_star_expansion_collision_prefix():
     assert "`t1.id`" in out and "`t2.id`" in out
     assert "`t1`.`name`" in out and "`name` AS" not in out  # non-colliding keeps plain name
     assert "`t2`.`val`" in out
+
+
+def test_star_expansion_lookup_error_propagates():
+    # Only an unknown-table analysis error may skip the expansion; any
+    # other lookup failure would silently drop the collision prefixes.
+    def lookup(name):
+        raise RuntimeError(f"catalog unavailable: {name}")
+
+    with pytest.raises(RuntimeError, match="catalog unavailable"):
+        translate("select * from t1, t2", schema_lookup=lookup)
 
 
 def test_case_when_aliased_colN():

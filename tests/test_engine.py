@@ -14,6 +14,10 @@ import pandas as pd
 import pytest
 
 
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
 def test_register_query_remove_roundtrip(engine):
     # ref sql_select_query.py:15-61
     pdf = pd.DataFrame({"a": [1, 2, 3], "b": ["x", "y", "z"]})
@@ -23,6 +27,102 @@ def test_register_query_remove_roundtrip(engine):
     engine.remove_temp_table("roundtrip_t")
     with pytest.raises(Exception):
         engine.query("select * from roundtrip_t")
+
+
+def test_pandas_frame_materialized_once_at_registration(engine):
+    # A registered pandas frame is stored rows, not a driver-side
+    # LocalRelation that every query re-evaluates in the optimizer and
+    # re-ships to the executors.
+    pdf = pd.DataFrame({"a": range(1000), "b": [f"s{i % 7}" for i in range(1000)]})
+    engine.register_temp_table(pdf, "mat_t")
+    df = engine.query("select a, b from mat_t where a % 10 = 3")
+    assert len(df.collect()) == 100
+    plan = _executed_plan(df)
+    assert "LocalTableScan" not in plan, plan
+    assert "Scan ExistingRDD" in plan, plan
+    engine.remove_temp_table("mat_t")
+
+
+def test_pandas_frame_stored_in_partitions_by_size(engine):
+    # The stored copy is split like a file of the same bytes: a frame
+    # well under maxPartitionBytes is one partition, not one per core.
+    spark = engine.spark
+    pdf = pd.DataFrame({"a": range(5000), "b": [f"s{i % 7}" for i in range(5000)]})
+    engine.register_temp_table(pdf, "split_t")
+    assert spark.table("split_t")._jdf.rdd().getNumPartitions() == 1
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "4k")
+    try:
+        engine.register_temp_table(pdf, "split_t")
+    finally:
+        spark.conf.set(key, old)
+    parts = spark.table("split_t")._jdf.rdd().getNumPartitions()
+    assert 1 < parts <= spark.sparkContext.defaultParallelism
+    out = engine.query_pandas("select a from split_t order by a")
+    assert out["a"].tolist() == list(range(5000))
+    engine.remove_temp_table("split_t")
+
+
+def test_query_built_before_remove_still_evaluates(engine):
+    # Queries are lazy; removing the view must not pull the stored
+    # rows out from under a DataFrame that already references them.
+    pdf = pd.DataFrame({"k": [1, 2, 2, 3], "v": [1.0, 2.0, 3.0, 4.0]})
+    engine.register_temp_table(pdf, "lazy_rm_t")
+    df = engine.query("select k, sum(v) as s from lazy_rm_t group by k")
+    engine.remove_temp_table("lazy_rm_t")
+    out = df.toPandas().sort_values("k")
+    assert out["k"].tolist() == [1, 2, 3]
+    assert out["s"].tolist() == [1.0, 5.0, 4.0]
+
+
+def test_spark_frame_registration_stays_lazy(engine):
+    # A Spark DataFrame is registered as a view, never materialized:
+    # at 100 TB a parquet view must not be copied at registration.
+    from tests.conftest import SF_DIR
+
+    spark = engine.spark
+    df = spark.read.parquet(f"{SF_DIR}/nation.parquet")  # schema read may run a job
+    group = "register-spark-frame"
+    spark.sparkContext.setJobGroup(group, group)
+    try:
+        engine.register_temp_table(df, "lazy_nation")
+    finally:
+        spark.sparkContext.setJobGroup(None, None)
+    assert list(spark.sparkContext.statusTracker().getJobIdsForGroup(group)) == []
+    plan = _executed_plan(engine.query("select n_name from lazy_nation"))
+    assert "FileScan parquet" in plan, plan
+    engine.remove_temp_table("lazy_nation")
+
+
+def test_pandas_registration_schema_unchanged(engine):
+    # Materializing at registration must keep exactly the schema (types
+    # and nullability) and the values createDataFrame gives the frame.
+    pdf = pd.DataFrame(
+        {
+            "i": [1, 2, 3],
+            "f": [1.5, float("nan"), 3.0],
+            "s": ["x", None, "z"],
+            "b": [True, False, True],
+            "ts": pd.to_datetime(["2020-01-01 00:00", "2021-06-15 12:30", None]),
+            "ni": pd.array([1, None, 3], dtype="Int64"),
+        }
+    )
+    engine.register_temp_table(pdf, "schema_t")
+    expected = engine.spark.createDataFrame(pdf)
+    assert engine.spark.table("schema_t").schema == expected.schema
+    pd.testing.assert_frame_equal(
+        engine.query_pandas("select * from schema_t"), expected.toPandas()
+    )
+    engine.remove_temp_table("schema_t")
+
+
+def test_comma_from_star_unknown_table_raises_analysis_error(engine):
+    # The star expansion skips an unknown table; Spark itself reports it.
+    from pyspark.errors import AnalysisException
+
+    with pytest.raises(AnalysisException, match="TABLE_OR_VIEW_NOT_FOUND"):
+        engine.query("select * from nation, table_that_never_was").collect()
 
 
 def test_remove_unregistered_raises(engine):
@@ -191,6 +291,26 @@ def test_engine_confs_applied_to_foreign_session(spark):
         )
         == "64MB"
     )
+
+
+def test_engine_for_keeps_caller_shuffle_partitions(spark):
+    # A value the session's owner set is theirs; only a session with no
+    # explicit value gets the local core count.
+    import os
+
+    from dataframe_sql_spark.registry import engine_for
+    from tests.conftest import SF_DIR as sf
+
+    mine = spark.newSession()
+    mine.conf.set("spark.sql.shuffle.partitions", "7")
+    engine_for(mine, sf)
+    assert mine.conf.get("spark.sql.shuffle.partitions") == "7"
+
+    unset = spark.newSession()
+    unset.conf.unset("spark.sql.shuffle.partitions")
+    engine_for(unset, sf)
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 4))
+    assert unset.conf.get("spark.sql.shuffle.partitions") == cpus
 
 
 def test_pivot_dynamic_cardinality_guard(spark):

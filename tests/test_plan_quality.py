@@ -15,6 +15,39 @@ def _formatted(df) -> str:
     )
 
 
+def _seq(jseq) -> list:
+    return [jseq.apply(i) for i in range(jseq.size())]
+
+
+def _plan_nodes(df) -> list:
+    """Every node of ``df``'s physical plan (JVM objects), read down
+    through the AQE wrapper and its query stages."""
+    stack, nodes = [df._jdf.queryExecution().executedPlan()], []
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan":
+            stack.append(node.executedPlan())
+            continue
+        if name.endswith("QueryStage"):
+            stack.append(node.plan())
+            continue
+        nodes.append(node)
+        stack.extend(_seq(node.children()))
+    return nodes
+
+
+def _hash_exchange_keys(node) -> list[str] | None:
+    """Column names a shuffle exchange hash-partitions on, or None for
+    any other node."""
+    if node.nodeName() != "Exchange":
+        return None
+    part = node.outputPartitioning()
+    if part.getClass().getSimpleName() != "HashPartitioning":
+        return None
+    return [a.name() for e in _seq(part.expressions()) for a in _seq(e.references().toSeq())]
+
+
 def test_filter_pushed_to_parquet_scan(engine):
     plan = _formatted(
         engine.query("select l_orderkey from lineitem where l_quantity > 45")
@@ -127,8 +160,12 @@ def test_prefix_filter_pairs_never_broadcasts(engine):
     rplan = ranked._sc._jvm.PythonSQLUtils.explainString(
         ranked._jdf.queryExecution(), "simple"
     )
-    assert "Window" in rplan and "Join" not in rplan, rplan
-    assert rplan.count("Exchange hashpartitioning(tok") == 1, rplan
+    nodes = _plan_nodes(ranked)
+    names = [n.nodeName() for n in nodes]
+    assert "Window" in names, rplan
+    assert not any("Join" in name for name in names), rplan
+    tok_exchanges = [n for n in nodes if _hash_exchange_keys(n) == ["tok"]]
+    assert len(tok_exchanges) == 1, rplan
 
 
 def test_constant_folding(engine):
