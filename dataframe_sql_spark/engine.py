@@ -12,6 +12,7 @@ gives the reference's eager-materialization convenience.
 
 from __future__ import annotations
 
+import threading
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -26,6 +27,12 @@ __all__ = [
     "register_temp_table",
     "remove_temp_table",
 ]
+
+_LOCAL_RELATION_THRESHOLD = "spark.sql.execution.arrow.localRelationThreshold"
+# Held across register_temp_table's threshold swap: two threads
+# registering on one session would otherwise read each other's 0 as the
+# caller's value and leave it set.
+_THRESHOLD_LOCK = threading.Lock()
 
 
 class SparkSqlEngine:
@@ -47,31 +54,61 @@ class SparkSqlEngine:
 
         A pandas frame is copied into executor storage once, here
         (reliable checkpoint when a checkpoint dir is set, else local).
-        Left as ``createDataFrame``'s driver-side ``LocalRelation``,
-        every query would re-evaluate it in Catalyst's optimizer
-        (``ConvertToLocalRelation``) and re-ship its rows to the
-        executors. The copy gets one partition per
-        ``spark.sql.files.maxPartitionBytes`` of its size, as a file of
-        the same bytes would be split. The blocks live until no
-        DataFrame references them, so a :meth:`query` result outlives
-        :meth:`remove_temp_table`. A Spark DataFrame stays a lazy view."""
+        Its Arrow batches are decoded on the executors: for the one
+        ``createDataFrame`` call ``spark.sql.execution.arrow.
+        localRelationThreshold`` is set to 0, then restored (or unset)
+        as the caller had it. A driver-side ``LocalRelation`` would cost
+        a row conversion on the driver and an optimizer pass over every
+        row, and the copy job would ship those rows in its task
+        closures. The stored copy keeps the size estimate such a
+        relation has (rows × row width, plus an exact row count), so a
+        registered dimension still broadcasts. It gets one partition
+        per ``spark.sql.files.maxPartitionBytes`` of that size, as a
+        file of the same bytes would be split. The blocks live until
+        no DataFrame references them, so a :meth:`query` result
+        outlives :meth:`remove_temp_table`. A Spark DataFrame stays a
+        lazy view."""
         if not isinstance(frame, DataFrame):
-            frame = truncate_lineage(self._split_by_size(self.spark.createDataFrame(frame)))
+            rows = len(frame)
+            if rows == 0:
+                # createDataFrame infers a pandas frame's schema from
+                # its rows and has none here; an Arrow table carries
+                # the same Arrow types the rows would have given.
+                import pyarrow as pa
+
+                frame = pa.Table.from_pandas(frame, preserve_index=False)
+            conf = self.spark.conf
+            with _THRESHOLD_LOCK:
+                caller = conf.get(_LOCAL_RELATION_THRESHOLD, None)
+                conf.set(_LOCAL_RELATION_THRESHOLD, "0")
+                try:
+                    df = self.spark.createDataFrame(frame)
+                finally:
+                    if caller is None:
+                        conf.unset(_LOCAL_RELATION_THRESHOLD)
+                    else:
+                        conf.set(_LOCAL_RELATION_THRESHOLD, caller)
+            frame = truncate_lineage(self._split_by_size(df, rows))
         frame.createOrReplaceTempView(table_name)
 
-    def _split_by_size(self, df: DataFrame) -> DataFrame:
-        """``df`` coalesced to one partition per maxPartitionBytes of its
-        size estimate. ``createDataFrame`` slices a frame into
-        defaultParallelism partitions whatever its size; a frame of a
-        few MiB stored that way makes every later query run a task per
-        core for a few milliseconds of work each, and pay per-task
-        overhead that grows when the cores are busy elsewhere."""
+    def _split_by_size(self, df: DataFrame, rows: int) -> DataFrame:
+        """``df`` as one partition per maxPartitionBytes of its size
+        estimate, at most defaultParallelism. An RDD of Arrow batches
+        has no size estimate; ``limit(rows)`` removes no row but gives
+        Catalyst the row count, and after ``coalesce(1)`` it needs no
+        exchange. ``createDataFrame`` slices a frame into one partition
+        per Arrow batch whatever its size; a frame of a few MiB stored
+        that way makes every later query run many tasks for a few
+        milliseconds of work each, and pay per-task overhead that grows
+        when the cores are busy elsewhere."""
         from .sources.io import _conf_bytes
 
+        df = df.coalesce(1).limit(rows)
         stats = df._jdf.queryExecution().optimizedPlan().stats()
         size = int(str(stats.sizeInBytes()))
         split = _conf_bytes(self.spark, "spark.sql.files.maxPartitionBytes", 128 * 1024**2)
-        return df.coalesce(max(1, -(-size // split)))
+        n = min(-(-size // split), self.spark.sparkContext.defaultParallelism)
+        return df.repartition(n) if n > 1 else df
 
     def remove_temp_table(self, table_name: str) -> None:
         """Drop a registered table. Mirrors sql_select_query.py:42-61

@@ -396,10 +396,24 @@ def sorted_neighborhood_pairs(
     sides' values without re-joining the source table per side (r15:
     two broadcast joins + one extra scan dropped from the
     x_sorted_neighborhood plan).
+
+    Raises ``ValueError`` for a ``carry_cols`` entry whose columns would
+    collide (names compare case-insensitively, as the session does):
+    ``id_col`` itself, ``id`` or ``pos`` (``id_a`` / ``pos_a`` are taken),
+    a name starting with ``__`` (internal columns), or a repeated entry.
     """
     from .lineage import truncate_lineage
     from .rank import global_rank
 
+    taken = {id_col.lower(), "id", "pos"}
+    for c in carry_cols:
+        if c.lower() in taken or c.startswith("__"):
+            raise ValueError(
+                f"carry_cols entry {c!r} collides with an output column: entries "
+                f"may not be id_col ({id_col!r}), 'id' or 'pos', start with '__', "
+                "or repeat"
+            )
+        taken.add(c.lower())
     order = [(c, True) for c in sort_cols] + [(id_col, True)]
     # r14: materialize the (id, pos) rank table once — it feeds BOTH
     # sides of the neighborhood join, and without the cut each side

@@ -26,6 +26,7 @@ __all__ = ["get_spark", "tune_session"]
 # (the driver's contract: entry(spark) / queries()[name](spark, sf_dir)).
 # Every key here is settable via spark.conf.set after session start —
 # verified against pyspark 4.1 (none is marked static/spark.core).
+# get_spark sets them on its builder; tune_session on a foreign session.
 _RUNTIME_CONFS = {
     # events.parquet stores TIMESTAMP(NANOS); without this the parquet
     # reader throws PARQUET_TYPE_ILLEGAL at registration. read_table
@@ -33,7 +34,7 @@ _RUNTIME_CONFS = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # Timestamp semantics must match the DuckDB oracle (UTC-naive).
     "spark.sql.session.timeZone": "UTC",
-    # Reference dialect is case-insensitive (SURVEY.md §1).
+    # Reference dialect is case-insensitive (SURVEY.md §1, §2.7 O5).
     "spark.sql.caseSensitive": "false",
     # Arrow for any toPandas/Pandas-UDF boundary.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
@@ -52,8 +53,12 @@ _RUNTIME_CONFS = {
     # Honest scan-size estimates: compressed parquet decodes to ~3-10×
     # its file bytes in memory, and the default factor of 1.0 let a
     # column-pruned FACT scan slip under the broadcast threshold
-    # (r12 sf1 A/B: Catalyst broadcast 6M-row lineitem — ~2× wall at
-    # sf1, OOM-class at 100 TB). See the builder comment in get_spark.
+    # (r12 sf1 A/B: Catalyst broadcast 6M-row lineitem — ~2× wall on
+    # every multi-join shape at sf1, q_join_multi 3.98→1.97 s; an
+    # OOM-class plan at 100 TB). 3× is the conservative end of that
+    # range; with honest sizes the static planner keeps big sides on
+    # SMJ/SHJ and AQE still broadcasts a genuinely small side from the
+    # real post-shuffle bytes.
     "spark.sql.sources.fileCompressionFactor": "3.0",
     # Shuffled hash join over sort-merge when a side's honest estimate
     # fits a per-partition hash map (canBuildLocalHashMap: size <
@@ -111,44 +116,8 @@ def get_spark(app_name: str = "dataframe_sql_spark") -> SparkSession:
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.default.parallelism", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
-        # Broadcast threshold: dims like region/nation/supplier stay
-        # broadcast even at 100 TB fact scale.
-        .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-        # Honest scan-size estimates (r12 sf1 A/B catch): Spark's
-        # file-size-based sizeInBytes treats compressed+encoded
-        # parquet bytes as in-memory bytes, so a column-pruned FACT
-        # scan (6M-row lineitem, 3 cols) estimated under the 64MB
-        # threshold and Catalyst BROADCAST THE FACT TABLE — ~2× wall
-        # on every multi-join shape at sf1 (q_join_multi 3.98→1.97 s,
-        # tpch_q5 4.00→1.97 s) and an OOM-class plan at 100 TB. 3×
-        # is the conservative end of parquet's measured 3-10×
-        # decode expansion; with honest sizes the static planner
-        # keeps big sides on SMJ and AQE still builds the genuinely
-        # small side from REAL post-shuffle bytes at runtime —
-        # size-based decisions stay correct at every scale instead
-        # of only below the estimate error.
-        .config("spark.sql.sources.fileCompressionFactor", "3.0")
-        # Hash join without the sort passes wherever a side's honest
-        # estimate fits a per-partition build (measured 10-20% on sf1
-        # join shapes, SCALE.md r12); merge hints on width-blind
-        # corpus joins outrank this. AQE's runtime SMJ→SHJ conversion
-        # from observed partition bytes backs up the static choice.
-        .config("spark.sql.join.preferSortMergeJoin", "false")
-        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64MB")
-        # Order-by-ordinal + case-insensitive resolution match the
-        # reference dialect (SURVEY.md §1, §2.7 O5).
-        .config("spark.sql.caseSensitive", "false")
-        # events.parquet stores TIMESTAMP(NANOS); read as long and let
-        # sources.io.read_table convert to microsecond timestamps
-        # JVM-side (no driver materialization).
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # The lineage-truncation operators (operators/lineage.py) eagerly
         # localCheckpoint intermediate frames; their blocks are freed by
         # the ContextCleaner only after a JVM GC collects the RDD object
@@ -171,6 +140,8 @@ def get_spark(app_name: str = "dataframe_sql_spark") -> SparkSession:
             os.environ.get("SPARK_GRAFT_PERIODIC_GC", "1min"),
         )
     )
+    for key, value in _RUNTIME_CONFS.items():
+        builder = builder.config(key, value)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -64,6 +64,130 @@ def test_pandas_frame_stored_in_partitions_by_size(engine):
     engine.remove_temp_table("split_t")
 
 
+def _plan_nodes(plan):
+    yield plan
+    kids = plan.children()
+    for i in range(kids.size()):
+        yield from _plan_nodes(kids.apply(i))
+
+
+def test_pandas_frame_decoded_on_executors(engine, monkeypatch):
+    # Registration hands the Arrow batches to the executors: the frame
+    # it stores holds no driver-side LocalRelation of the rows.
+    import dataframe_sql_spark.engine as engine_mod
+
+    handed = []
+    real = engine_mod.truncate_lineage
+
+    def capture(df, *args, **kwargs):
+        handed.append(df)
+        return real(df, *args, **kwargs)
+
+    monkeypatch.setattr(engine_mod, "truncate_lineage", capture)
+    pdf = pd.DataFrame({"a": range(1000), "b": [f"s{i % 7}" for i in range(1000)]})
+    engine.register_temp_table(pdf, "exec_t")
+    [df] = handed
+    analyzed = df._jdf.queryExecution().analyzed().toString()
+    assert "LocalRelation" not in analyzed, analyzed
+    assert engine.query_pandas("select count(*) as n from exec_t")["n"][0] == 1000
+    engine.remove_temp_table("exec_t")
+
+
+def test_pandas_frame_keeps_size_estimate_and_broadcasts(engine):
+    # The stored copy has the estimate a LocalRelation of the rows has
+    # (rows × (8 + default row size)) and an exact row count, so a small
+    # registered frame is the static broadcast side of a join.
+    pdf = pd.DataFrame({"k": range(1, 6), "tag": [f"t{i}" for i in range(5)]})
+    engine.register_temp_table(pdf, "dim_t")
+    jdf = engine.spark.table("dim_t")._jdf
+    stats = jdf.queryExecution().optimizedPlan().stats()
+    assert int(str(stats.sizeInBytes())) == 5 * (8 + jdf.schema().defaultSize())
+    assert int(str(stats.rowCount().get())) == 5
+    df = engine.query("select l_orderkey, tag from lineitem join dim_t on l_linenumber = k")
+    initial = df._jdf.queryExecution().executedPlan().initialPlan()  # before AQE
+    [bx] = [n for n in _plan_nodes(initial) if n.nodeName() == "BroadcastExchange"]
+    assert "Scan ExistingRDD" in bx.toString(), initial.toString()
+    assert "FileScan" not in bx.toString(), initial.toString()
+    engine.remove_temp_table("dim_t")
+
+
+@pytest.mark.parametrize("caller", [None, "10m"])
+def test_registration_restores_local_relation_threshold(engine, caller):
+    # The threshold is set for registration's createDataFrame only; the
+    # caller's value (or its absence) is back when the call returns.
+    spark = engine.spark
+    key = "spark.sql.execution.arrow.localRelationThreshold"
+    before = spark.conf.get(key, None)
+    if caller is None:
+        spark.conf.unset(key)
+    else:
+        spark.conf.set(key, caller)
+    try:
+        engine.register_temp_table(pd.DataFrame({"a": [1, 2]}), "conf_t")
+        assert spark.conf.get(key, None) == caller
+        small = spark.createDataFrame(pd.DataFrame({"a": [1, 2, 3]}))
+        assert "LocalRelation" in small._jdf.queryExecution().analyzed().toString()
+    finally:
+        if before is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, before)
+    engine.remove_temp_table("conf_t")
+
+
+def test_concurrent_registrations_restore_threshold(engine):
+    # Registrations racing on one session must not leave the 0 set:
+    # each one's restore sees the caller's value, not another's swap.
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    spark = engine.spark
+    key = "spark.sql.execution.arrow.localRelationThreshold"
+    before = spark.conf.get(key, None)
+    spark.conf.unset(key)
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            futures = [
+                pool.submit(
+                    engine.register_temp_table, pd.DataFrame({"a": [i, i + 1]}), f"race_{i}"
+                )
+                for i in range(16)
+            ]
+            for f in futures:
+                f.result(timeout=120)
+        assert spark.conf.get(key, None) is None
+    finally:
+        sys.setswitchinterval(interval)
+        if before is not None:
+            spark.conf.set(key, before)
+    for i in range(16):
+        assert engine.query_pandas(f"select a from race_{i}")["a"].tolist() == [i, i + 1]
+        engine.remove_temp_table(f"race_{i}")
+
+
+def test_zero_row_pandas_frame_registers(engine):
+    # createDataFrame cannot infer a schema from a frame with no rows;
+    # registration still stores it, with the schema the same dtypes get
+    # when the frame has rows.
+    pdf = pd.DataFrame(
+        {
+            "i": [1],
+            "f": [1.5],
+            "s": pd.array(["x"], dtype="string"),
+            "b": [True],
+            "ts": pd.to_datetime(["2020-01-01"]),
+            "ni": pd.array([1], dtype="Int64"),
+        }
+    )
+    engine.register_temp_table(pdf.iloc[:0], "empty_t")
+    out = engine.query("select * from empty_t")
+    assert out.count() == 0
+    assert out.schema == engine.spark.createDataFrame(pdf).schema
+    engine.remove_temp_table("empty_t")
+
+
 def test_query_built_before_remove_still_evaluates(engine):
     # Queries are lazy; removing the view must not pull the stored
     # rows out from under a DataFrame that already references them.
@@ -291,6 +415,15 @@ def test_engine_confs_applied_to_foreign_session(spark):
         )
         == "64MB"
     )
+
+
+def test_get_spark_applies_every_runtime_conf(spark):
+    # get_spark builds the session from _RUNTIME_CONFS; a new session
+    # of the same context (which tune_session never saw) carries them.
+    from dataframe_sql_spark.session import _RUNTIME_CONFS
+
+    fresh = spark.newSession()
+    assert {k: fresh.conf.get(k) for k in _RUNTIME_CONFS} == _RUNTIME_CONFS
 
 
 def test_engine_for_keeps_caller_shuffle_partitions(spark):

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from dataframe_sql_spark.operators.joins import (
@@ -163,6 +164,21 @@ def test_sorted_neighborhood_carry_cols_match_rejoin(spark):
     for (a, b), (pa, pb, na, nb) in carried.items():
         assert (pa, pb) == plain[(a, b)]
         assert na == names[a] and nb == names[b]
+
+
+@pytest.mark.parametrize(
+    "carry", [("rid",), ("RID",), ("id",), ("pos",), ("__pos",), ("name", "Name")]
+)
+def test_sorted_neighborhood_carry_cols_collisions_rejected(spark, carry):
+    # Each of these would duplicate an output or internal column name
+    # (id_col, id_a/pos_a, __pos, name_a twice); reject before planning.
+    from dataframe_sql_spark.operators.joins import sorted_neighborhood_pairs
+
+    df = spark.createDataFrame(
+        [(1, "aaa", 1, 1), (2, "aab", 2, 2)], ["rid", "name", "id", "pos"]
+    )
+    with pytest.raises(ValueError, match="carry_cols"):
+        sorted_neighborhood_pairs(df, ["name"], "rid", window=2, carry_cols=carry)
 
 
 def test_sorted_neighborhood_candidate_volume_is_linear(spark):
